@@ -53,7 +53,7 @@ final class Catalog(val spark: SparkSession) {
 }
 
 /** Fixture-table reader helpers (TESTDATA.md / FIXTURES.md §2). */
-/** Scratch-space selection for graft-owned sessions (Bench/Verify/tests):
+/** Scratch-space selection for graft-owned sessions (GraftSession):
   * prefer a RAM-backed tmpfs for everything ephemeral — shuffle/spill
   * files (`spark.local.dir`), streaming checkpoints, and the temp dirs
   * the sink-roundtrip queries write through (`java.io.tmpdir`). On this
@@ -98,14 +98,14 @@ object Scratch {
     base
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit
   }
 
   /** Session confs that strip client-side checksumming from the local
-    * filesystem for graft-owned sessions (Bench/Verify/probes).
+    * filesystem for graft-owned sessions (GraftSession, perfbench).
     *
     * Hadoop's default `file://` implementations (`LocalFileSystem` /
     * `LocalFs`) are CHECKSUMMED: every file written — parquet footers,

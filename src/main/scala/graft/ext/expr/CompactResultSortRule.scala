@@ -23,7 +23,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Scale honesty — two independent gates, both required:
   *  - SESSION: the session's shuffle-partition count must be <= 16
-  *    (Bench sizes `spark.sql.shuffle.partitions` at ~64 MB of input
+  *    (GraftSession sizes `spark.sql.shuffle.partitions` at ~64 MB of input
   *    per partition, so <= 16 means the ENTIRE input is ~1 GB or
   *    less). On a real cluster (thousands of shuffle partitions) the
   *    rule never fires and large sorted outputs keep the parallel
@@ -73,8 +73,8 @@ object CompactResultSortRule extends Rule[LogicalPlan] {
     if (!enabled) plan else rewriteRoot(plan)
 
   /** Descend from the root through row- and order-preserving wrappers
-    * (Project / SubqueryAlias) and through write commands (Bench and
-    * Verify both time WRITES, so the delivery sort sits under an
+    * (Project / SubqueryAlias) and through write commands (perfbench
+    * and Verify both run WRITES, so the delivery sort sits under an
     * AppendData / InsertIntoHadoopFsRelationCommand node, never at the
     * literal root); rewrite the first global Sort found and stop. No
     * recursion past it — any deeper Sort is mid-plan and keeps its

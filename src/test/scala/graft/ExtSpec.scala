@@ -2003,16 +2003,23 @@ class ExtSpec extends SparkSpec {
     // sizes straddle every ntile(10) remainder class (n % 10 = 0..9),
     // n < k, and n == 1 — the boundary cases of the SQL NTILE padding
     // rule the rank-arithmetic rewrite must reproduce bit-for-bit.
-    // Three modes: the default stats-gated small path (single-kernel
-    // rank), the forced WIDE path (advisory=1 byte pushes every frame
-    // over the volume gate, exercising the range-partition + broadcast
-    // offsets machinery), and the legacy single-window lever.
+    // Each mode is checked against the Window formulation below: the
+    // default stats-gated small path (single-kernel rank), the forced
+    // WIDE path (advisory=1 byte pushes every frame over the volume
+    // gate, exercising the range-partition + broadcast offsets
+    // machinery), and both again with AQE on, the volume rule's setting
+    // from 1 GiB of input (runtime coalescing merges the range
+    // partitions the offsets are keyed by).
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     val modes = Seq(
       "small" -> (() => {}),
       "wide" -> (() => spark.conf
         .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")),
-      "legacy" -> (() => spark.conf
-        .set("spark.graft.rank.rangePartitioned", "false")))
+      "aqe" -> (() => spark.conf.set("spark.sql.adaptive.enabled", "true")),
+      "aqe-wide" -> (() => {
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+      }))
     for ((mode, set) <- modes; n <- Seq(1, 3, 7, 10, 11, 19, 20, 23, 64, 100))
       try {
         set()
@@ -2032,23 +2039,29 @@ class ExtSpec extends SparkSpec {
       assert(got.toSeq === want.toSeq, s"mismatch at n=$n mode=$mode")
     } finally {
       spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      spark.conf.unset("spark.graft.rank.rangePartitioned")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
     }
   }
 
   test("abcClassification/spearmanSpend: range-partitioned cumsum equals the single-window formulation") {
     import spark.implicits._
     // withGlobalCumSum backs both consumers (decimal cents in abc, long
-    // counts in spearman's rank2). Three modes, legacy = the original
-    // single-partition cumulative window as the reference; sizes
-    // straddle 1 row, fewer rows than partitions, and multi-partition
-    // frames under the forced-wide gate.
+    // counts in spearman's rank2). The small mode is the reference: at
+    // these sizes it runs the single-partition cumulative Window below
+    // the volume gate. Sizes straddle 1 row, fewer rows than partitions,
+    // and multi-partition frames under the forced-wide gate. The aqe
+    // modes rerun both paths with AQE on (the volume rule's setting from
+    // 1 GiB of input), whose runtime coalescing merges range partitions.
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     val modes = Seq(
       "small" -> (() => {}),
       "wide" -> (() => spark.conf
         .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")),
-      "legacy" -> (() => spark.conf
-        .set("spark.graft.rank.rangePartitioned", "false")))
+      "aqe" -> (() => spark.conf.set("spark.sql.adaptive.enabled", "true")),
+      "aqe-wide" -> (() => {
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+      }))
     def canon(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
       rows.toSeq.map(_.toSeq)
     for (n <- Seq(1, 2, 7, 33, 100)) {
@@ -2064,10 +2077,10 @@ class ExtSpec extends SparkSpec {
             canon(Aggregates.spearmanSpend(orders).collect()))
         } finally {
           spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          spark.conf.unset("spark.graft.rank.rangePartitioned")
+          spark.conf.set("spark.sql.adaptive.enabled", aqe0)
         }
       }
-      val (_, abcRef, spRef) = got.last // legacy reference
+      val (_, abcRef, spRef) = got.head // small-mode (Window) reference
       for ((mode, abc, sp) <- got) {
         assert(abc === abcRef, s"abc mismatch at n=$n mode=$mode")
         assert(sp === spRef, s"spearman mismatch at n=$n mode=$mode")
@@ -3453,13 +3466,36 @@ class ExtSpec extends SparkSpec {
 
   test("gram coverage: hash-agg shape equals the legacy collect_set shape") {
     // the r8 load-robust reformulation must be row-identical to the
-    // collect_set original it replaced (the A/B lever's correctness leg)
-    def run() = Curation.gramCoverage(t("documents", "sf0.01")).collect().toSeq
-    val hashAgg = run()
-    spark.conf.set("spark.graft.gramCoverage.legacy", "true")
-    val legacy = try run()
-      finally spark.conf.unset("spark.graft.gramCoverage.legacy")
-    assert(hashAgg === legacy)
+    // per-shingle collect_set formulation it replaced, rebuilt here as
+    // the reference
+    val docs = t("documents", "sf0.01")
+    val sp = Dedup.shingleHashes(docs).join(
+        Curation.splitAssign(docs, "doc_id")
+          .filter(col("split").isin("train", "test"))
+          .select(col("doc_id"), col("lang"), col("split")), Seq("doc_id"))
+      .select(col("lang"), col("split"), col("s").as("sh"))
+    val legacy = sp.groupBy(col("sh")).agg(
+        max(when(col("split") === "train", 1).otherwise(0)).as("in_train"),
+        // collect_set skips nulls, so train-side rows contribute nothing
+        collect_set(when(col("split") === "test", col("lang"))).as("test_langs"))
+      .select(col("in_train"), explode(col("test_langs")).as("lang"))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).cast("long").as("n_test_shingles"),
+        sum(col("in_train")).cast("long").as("n_covered"))
+      .withColumn("coverage4", Num.trunc4(
+        col("n_covered").cast("double") / col("n_test_shingles").cast("double")))
+      .orderBy(col("lang"))
+      .collect().toSeq
+    assert(legacy.nonEmpty)
+    assert(Curation.gramCoverage(docs).collect().toSeq === legacy)
+    // again with AQE on, the volume rule's setting from 1 GiB of input
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      assert(Curation.gramCoverage(docs).collect().toSeq === legacy, "mismatch with AQE on")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+    }
   }
 
   test("shard balance: partitions all docs into range") {

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared Spark fixture: one local session per suite, config matching
-  * Verify/Bench (UTC, ANSI off, ns-as-long).
+/** Shared Spark fixture: one local session per suite, built by
+  * [[GraftSession]] like Verify's, on `local[4]` over the sf0.001 fixture.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,18 +15,11 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val tmpBase = Scratch.dir()
-    val s = SparkSession.builder()
+    val s = GraftSession.builder("/root/testdata/sf0.001")
       .master("local[4]")
-      .appName("graft-test")
-      .config("spark.local.dir", s"$tmpBase/spark-local")
+      // the multi-partition shuffle/rank/cumsum specs are written against
+      // 4 partitions; the volume rule alone gives 1 on local[4]
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
